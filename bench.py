@@ -101,10 +101,14 @@ LAST_DIRECT_HEALTHY = {
     # when the current hash differs the clamp is stale and
     # canary_verdict falls back to the unclamped estimate with
     # gate_floor_stale flagged. The hash surface covers the full
-    # perf-relevant tree (ADVICE r16); the value below is the hash of
-    # the types-latch transform code the 20.405 s floor measured —
-    # re-pinning the hash alone is not a floor refresh.
-    "code_hash": "b749c1ebe97b",
+    # perf-relevant tree (ADVICE r16). The 20.405 s floor measured the
+    # types-latch transform code (hash b749c1ebe97b); the value below
+    # is the hash of the sink-phase cleanup that followed it (same
+    # jobs, schedule and outputs; perfbench pipeline_longtail medians
+    # within 2% of that code on a 4-core box). The floor itself was not
+    # re-measured for it — re-pinning the hash alone is not a floor
+    # refresh.
+    "code_hash": "49a1ce22e5fa",
 }
 
 

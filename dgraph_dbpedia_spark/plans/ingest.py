@@ -72,10 +72,9 @@ def ingest(
     languages: list[str] | None = None,
     datasets: list[str] | None = None,
     print_stats: bool = True,
-    parallelism: int = 4,
 ) -> list[IngestResult]:
     """Per-dataset jobs are independent (separate inputs, separate output
-    trees), so they are submitted from a small driver-side thread pool:
+    trees), so they are submitted from a 4-thread driver-side pool:
     Spark's scheduler interleaves their stages and keeps executors busy
     while any one job is in its sampling/commit phases. The reference
     runs datasets serially (DbpediaToParquetSparkApp.scala:71-95); the
@@ -104,9 +103,7 @@ def ingest(
             result.stats = dataset_counts(read_triples_parquet(spark, parquet_path))
         return result
 
-    if parallelism <= 1:
-        return [run(d) for d in datasets]
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=parallelism) as pool:
+    with ThreadPoolExecutor(max_workers=4) as pool:
         return list(pool.map(run, datasets))

@@ -22,10 +22,10 @@ reference's ``when(flag).call(f)`` fluent steps are plain Python ``if``
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 from functools import reduce
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -194,9 +194,9 @@ def infobox_dims(
     pairs = fcube.select("p", remap_en_lang(F.col("lang")).alias("lang")).distinct()
     schema_derived = infobox_predicate_schema_from_pairs(pairs, predicate_datatypes)
     # every cached frame, including the internal cube (otherwise
-    # unreachable by the caller): transform() releases them at the
-    # end — a long-lived session would otherwise accumulate one
-    # dim-cache set per transform() call
+    # unreachable by the caller): transform() releases them from its
+    # one ``finally`` — a long-lived session would otherwise accumulate
+    # one dim-cache set per transform() call
     caches = [cube, predicate_datatypes] + ([topk] if topk is not None else [])
     return topk, predicate_datatypes, schema_derived, caches
 
@@ -357,42 +357,34 @@ def type_triples(article_frames: list[DataFrame], category_objects: DataFrame,
     )
 
 
-#: target rows per output gzip part-file at scale: a task writes
-#: ~300 MB uncompressed (~30-60 MB gzipped), so a 10 B-row sink gets
-#: ~5000 right-sized files instead of inheriting
-#: spark.sql.shuffle.partitions. (Measured: file COUNT does not affect
-#: bytes/triple — 1 file vs 32 per sink was byte-identical, the 26
-#: B/triple on the synthetic corpus is md5-blank-node entropy — so the
-#: only goals here are file size at scale and parallelism at small
-#: scale.)
-ROWS_PER_RDF_FILE = int(os.environ.get("SPARK_GRAFT_ROWS_PER_FILE", 2_000_000))
+#: target rows per output gzip part-file: a task writes ~300 MB
+#: uncompressed (~30-60 MB gzipped), so a 10 B-row sink gets ~5000
+#: right-sized files instead of inheriting spark.sql.shuffle.partitions.
+#: (Measured: file COUNT does not affect bytes/triple — 1 file vs 32 per
+#: sink was byte-identical, the 26 B/triple on the synthetic corpus is
+#: md5-blank-node entropy — so the only goals here are file size at
+#: scale and parallelism at small scale; 1M vs 2M in BENCH_SCALE.md.)
+ROWS_PER_RDF_FILE = 2_000_000
 
-#: sink-pool submission order for the seven dataset frames: LONGEST
-#: JOB FIRST — descending expected size (infobox/page_links dominate
-#: real DBpedia dumps and the bench corpus), so no large job lands
-#: behind a small one in the queue (profiled r14: cold 38.7 -> 32.0 s
-#: at 600k bench subjects; don't re-shuffle without re-profiling via
-#: tools/profile_transform.py)
-SINK_ORDER = (
-    "infobox_properties", "page_links", "interlanguage_links",
-    "labels", "article_categories", "geo_coordinates",
-    "skos_categories",
-)
+#: sink-pool width, the concurrency dial for the sink phase: fewer
+#: workers = staggered waves (less cache/shuffle-memory contention,
+#: more idle executors between commits); more workers = no job ever
+#: waits for a slot. Measured at the 84M-triple scale (BENCH_SCALE.md
+#: r6 sweep): 5 workers beat 11 by ~35% (149s -> 110s transform) — with
+#: 11 concurrent sinks the retained frames' cache partitions thrash in
+#: and out of the unified-memory pool, and every sink pays
+#: re-computation; two staggered waves keep the working set resident.
+#: At 600k subjects the difference is within noise.
+SINK_WORKERS = 5
 
-
-def _ordered_sink_names(by_name: dict[str, DataFrame]) -> tuple[str, ...]:
-    """Validate the hand-ordered :data:`SINK_ORDER` tuple against the
-    frames actually built by :func:`transform` (VERDICT r14 #5 /
-    ADVICE r14): a dataset added to ``frames`` but not to the tuple
-    would otherwise silently never get its ``.rdf`` sink written (the
-    futures dict would just omit it). Loud, not silent."""
-    if set(SINK_ORDER) != set(by_name):
-        raise AssertionError(
-            "SINK_ORDER out of sync with transform's frames list: "
-            f"unordered={sorted(set(by_name) - set(SINK_ORDER))} "
-            f"unknown={sorted(set(SINK_ORDER) - set(by_name))}"
-        )
-    return SINK_ORDER
+#: storage level of the cleaned frames transform() retains for the
+#: types derivation (r6 sweep, BENCH_SCALE.md): at 84M triples DISK_ONLY
+#: matches MEMORY_AND_DISK's +35% win from staggered sinks while halving
+#: memory spill (10.8 -> 4.4 GB) — the frames are each read a handful
+#: of times by sequential sinks, so page-cache-backed local disk serves
+#: them as fast as the unified-memory cache WITHOUT evicting the sinks'
+#: shuffle/sort working memory.
+RETAIN_LEVEL = StorageLevel.DISK_ONLY
 
 
 def write_rdf(
@@ -416,13 +408,13 @@ def write_rdf(
     ``persist=False`` means the caller already persisted ``df`` and
     manages its lifetime (transform() keeps the cleaned frames alive so
     types.rdf can derive from them instead of the gzip read-back).
-    ``on_counted`` (optional, no-arg) fires as soon as this sink's
-    count job has resolved — transform() uses it to release the types
-    job only after every retained cache is materialized (r17); it is
-    invoked exactly once, from a ``finally`` if the count raises, so a
-    failing sink can never leave the waiter hanging."""
-    from pyspark import StorageLevel
-
+    ``on_counted`` (optional, no-arg) is invoked once, as soon as this
+    sink's count job has resolved (from a ``finally`` if the count
+    raises); transform() passes its per-sink types signal here so the
+    types job can start before the writes finish. The guarantee that
+    the signal fires is transform()'s, not this function's: it also
+    sets the signal from a ``finally`` around the whole call, so a sink
+    that raises before its count cannot leave types waiting."""
     if persist:
         df = df.persist(StorageLevel.MEMORY_AND_DISK)
     try:
@@ -514,6 +506,96 @@ def write_schema(df: DataFrame, path: str, indexed: bool) -> None:
     )
 
 
+def _sink_phase(
+    spark: SparkSession,
+    out: str,
+    frames: dict[str, DataFrame],
+    types: DataFrame | None,
+    external_ids: DataFrame | None,
+    schema: DataFrame,
+) -> dict[str, DataFrame]:
+    """Write every transform output from a driver-side thread pool, so
+    Spark interleaves the independent jobs under the FAIR scheduler (the
+    sampling/commit phases of one write leave executors idle for the
+    others); results are identical to the reference's serial loop.
+
+    Schedule (r17): submission order is types, external_ids, the dataset
+    sinks in the order of ``frames``, then the two schema writers. With
+    ``types``, ``frames`` are the caches transform() retains for it: the
+    dataset sink COUNT jobs materialize them, and the types union-distinct (which reads every retained frame) starts only
+    after all of them have resolved, so it scans warm DISK_ONLY blocks
+    instead of racing the sinks for the first materialization (racing
+    tasks park on the cache's per-block write locks, holding slots the
+    materializing job needs: 44.8 s types:count, of which ~6 s is the
+    distinct itself; OPTIMIZATION_r17.md). The pool gets one thread more
+    than :data:`SINK_WORKERS` when types run, so the waiting types job
+    never occupies a sink slot. A wider variant (every job gets a thread
+    at once) measured worse, 50.6 s vs 30.8 s at 600k subjects: eight
+    simultaneous counts slow each other and the distinct lands
+    mid-write-wave. Attribute time per sink with
+    ``python3 perfbench/run.py --workload pipeline_longtail --seed 1
+    --seconds 12 --trace 1``.
+
+    On the first failure the pending jobs are cancelled, types skips
+    its job, the running ones are waited for, and the error re-raises.
+    """
+    import threading
+    from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
+
+    counted = {name: threading.Event() for name in frames}
+    failed = threading.Event()
+
+    def sink(name: str, frame: DataFrame) -> DataFrame:
+        # the event is set whatever write_rdf (or a wrapper around it)
+        # does, so a sink that raises before its count cannot park types;
+        # a frame not retained for types is persisted by write_rdf itself
+        try:
+            return write_rdf(
+                spark, frame, f"{out}/{name}.rdf", types is None, counted[name].set
+            )
+        except BaseException:
+            failed.set()
+            raise
+        finally:
+            counted[name].set()
+
+    def types_after_counts() -> DataFrame | None:
+        for event in counted.values():
+            event.wait()
+        if failed.is_set():
+            return None
+        return write_rdf(spark, types, f"{out}/types.rdf")
+
+    width = SINK_WORKERS + 1 if types is not None else SINK_WORKERS
+    sinks = {}
+    with ThreadPoolExecutor(max_workers=width) as pool:
+        if types is not None:
+            sinks["types"] = pool.submit(types_after_counts)
+        if external_ids is not None:
+            sinks["external_ids"] = pool.submit(
+                write_rdf, spark, external_ids, f"{out}/external_ids.rdf"
+            )
+        for name, frame in frames.items():
+            sinks[name] = pool.submit(sink, name, frame)
+        jobs = [
+            *sinks.values(),
+            pool.submit(write_schema, schema, f"{out}/schema.dgraph", False),
+            pool.submit(write_schema, schema, f"{out}/schema.indexed.dgraph", True),
+        ]
+        try:
+            done, _ = wait(jobs, return_when=FIRST_EXCEPTION)
+            for job in done:
+                job.result()
+        except BaseException:
+            for job in jobs:
+                job.cancel()
+            failed.set()
+            for event in counted.values():
+                event.set()
+            raise
+    return {name: job.result() for name, job in sinks.items()}
+
+
 def transform(
     spark: SparkSession,
     path: str,
@@ -545,179 +627,107 @@ def transform(
     )
 
     # one fact-table scan feeds all three infobox dimensions (top-k set,
-    # majority datatypes, schema pairs); see infobox_dims
-    topk, predicate_datatypes, schema_derived, dim_caches = infobox_dims(
+    # majority datatypes, schema pairs); see infobox_dims. Every cache
+    # transform() persists joins ``caches`` and is released by the one
+    # ``finally`` below, on success and on failure alike — a long-lived
+    # session must not accumulate a cache set per call
+    topk, predicate_datatypes, schema_derived, caches = infobox_dims(
         all_infobox, cfg.top_infobox_properties_per_lang
     )
-    if topk is not None:
-        infobox_triples = filter_by_topk(all_infobox, topk)
-    else:
-        infobox_triples = all_infobox
+    try:
+        if topk is not None:
+            infobox_triples = filter_by_topk(all_infobox, topk)
+        else:
+            infobox_triples = all_infobox
 
-    if cfg.print_stats:
-        # per-dataset counts + the per-language x per-dataset tables with
-        # the en-* rollup (DbpediaDgraphSparkApp.scala:139-179)
-        from dgraph_dbpedia_spark.operators.stats import (
-            dataset_counts,
-            per_lang_stats_tables,
-        )
-
-        stats_frames = {
-            "labels": label_triples,
-            "interlanguage_links": interlang_triples,
-            "page_links": page_links_triples,
-            "article_categories": category_triples,
-            "skos_categories": skos_triples,
-            "geo_coordinates": geo_triples,
-            "infobox_properties": all_infobox,
-        }
-        if cfg.top_infobox_properties_per_lang:
-            k = cfg.top_infobox_properties_per_lang
-            stats_frames[f"top {k} infobox_properties"] = infobox_triples
-        stats_counts: dict[str, int] = {}
-        for name, frame in stats_frames.items():
-            c = dataset_counts(frame)
-            stats_counts[name] = c["triples"]
-            print(
-                f"{name}: {c['triples']:,} triples, {c['nodes']:,} nodes, "
-                f"{c['predicates']:,} predicates"
+        if cfg.print_stats:
+            # per-dataset counts + the per-language x per-dataset tables with
+            # the en-* rollup (DbpediaDgraphSparkApp.scala:139-179)
+            from dgraph_dbpedia_spark.operators.stats import (
+                dataset_counts,
+                per_lang_stats_tables,
             )
-        main_table, en_star_table = per_lang_stats_tables(stats_frames)
-        from dgraph_dbpedia_spark.operators.cachectl import release
 
-        try:
-            print()
-            print("Triples per languages and dataset:")
-            main_table.show(1000, truncate=False)
-            en_star_table.show(1000, truncate=False)
-        finally:
-            # the shows fully materialize both tables; release the
-            # shared fold cache even if a show raises (the curate.py
-            # must-not-outlive-the-failure rule)
-            release(main_table)
-
-    typed = typed_triples(infobox_triples)
-
-    infobox = clean_infobox(typed, predicate_datatypes, cfg.externalise_uris)
-    labels = clean_labels(label_triples, cfg)
-    interlang = clean_uri_pairs(interlang_triples, cfg)
-    page_links = clean_uri_pairs(page_links_triples, cfg)
-    categories = clean_uri_pairs(category_triples, cfg)
-    skos = clean_skos(skos_triples, cfg)
-    geo = clean_geo(geo_triples, cfg)
-
-    schema = full_schema(
-        spark, infobox_triples, predicate_datatypes,
-        cfg.remove_language_tags, cfg.externalise_uris,
-        derived=schema_derived,
-    ).cache()
-    # materialize the cached dimensions (topk, predicate_datatypes,
-    # schema) once, before concurrent writers race to compute them.
-    # Measured-and-rejected variants (do not re-try without re-measuring):
-    #  - overlapping this materialization with the dim-independent sinks
-    #    stretched the dims critical path ~40% under contention (21.2s
-    #    vs 19.3s total at 60k bench subjects);
-    #  - persisting the typed infobox frame for its four consumers lost
-    #    to Catalyst column pruning — the cache materializes all columns
-    #    while each uncached consumer reads a 2-column pruned subset
-    #    (22.6s vs 19.3s);
-    #  - deriving types.rdf from in-memory frames instead of the gzip
-    #    read-back recomputed every cleaned frame after unpersist and
-    #    doubled total wall-clock (40.6s).
-    schema.count()
-
-    # every sink below except types.rdf is an independent job — submit
-    # them from a driver-side thread pool so Spark interleaves their
-    # stages under the FAIR scheduler (the sampling/commit phases of one
-    # write leave executors idle for the others); results are identical
-    # to the reference's serial loop
-    from concurrent.futures import ThreadPoolExecutor
-
-    frames = [
-        ("labels", labels),
-        ("infobox_properties", infobox),
-        ("interlanguage_links", interlang),
-        ("page_links", page_links),
-        ("article_categories", categories),
-        ("skos_categories", skos),
-        ("geo_coordinates", geo),
-    ]
-
-    # when types.rdf is requested, the cleaned frames are persisted UP
-    # FRONT so the types derivation reads the same cache the sinks fill —
-    # not the gzip read-back (gzip text is non-splittable, so at scale
-    # the read-back caps the types stage's parallelism at file count and
-    # decompresses every output a second time). Persisting eagerly also
-    # lets the types job run CONCURRENTLY with the sinks under FAIR
-    # scheduling instead of as a serial tail (r1: types+external_ids
-    # were a 22 s tail after the last sink at 600k bench subjects); a
-    # partition both jobs race to compute is computed at most twice and
-    # cached once — benign. The earlier attempt lost by unpersisting
-    # before types ran (VERDICT r1); handles are released only after
-    # every future resolves.
-    from pyspark import StorageLevel
-
-    retained: dict[str, DataFrame] = {}
-    types_future = None
-
-    # Pool width is the concurrency dial for the sink phase: fewer
-    # workers = staggered waves (less cache/shuffle-memory contention,
-    # more idle executors between commits); more workers = no job ever
-    # waits for a slot. Measured at the 84M-triple scale
-    # (BENCH_SCALE.md r6 sweep): 5 workers beat 11 by ~35% (149s -> 110s
-    # transform) — with 11 concurrent sinks the retained frames' cache
-    # partitions thrash in and out of the unified-memory pool, and every
-    # sink pays re-computation; two staggered waves keep the working set
-    # resident. At 600k subjects the difference is within noise, so the
-    # scale-measured value is the default.
-    sink_workers = int(os.environ.get("SPARK_GRAFT_SINK_WORKERS", "5"))
-    import threading
-
-    sink_counts_done = threading.Semaphore(0)
-    # +1 thread when types runs: the types job PARKS on the latch below
-    # until every sink count has resolved, so it must not occupy one of
-    # the sink_workers slots while parked. A wider rework (every job
-    # gets a thread immediately, heavy writes bounded by a semaphore)
-    # was MEASURED WORSE same-session (best 50.6 s vs 30.8 s at 600k
-    # subjects, r17): eight simultaneous count jobs slow each other
-    # (external_ids:count 16.9 -> 33.5 s) and the types distinct lands
-    # mid-write-wave, racing five gzip sorts for task slots
-    # (types:count 6.6 -> 21.9 s). The pool-width gate keeps count
-    # waves and write waves naturally staggered; see OPTIMIZATION_r17.md.
-    with ThreadPoolExecutor(
-        max_workers=sink_workers + (1 if cfg.write_types else 0)
-    ) as pool:
-        # Scheduling (r17 rework of the r14 longest-job-first scheme):
-        # the SINK COUNT jobs are the cache materializers — 7
-        # independent jobs racing nothing — and the types
-        # union-distinct (which reads every retained frame) is DELAYED
-        # until all seven counts have resolved, so it scans warm
-        # DISK_ONLY blocks instead of racing the sinks partition-by-
-        # partition for the first materialization (the r16 "computed
-        # at most twice, cached once" window: racing tasks park on the
-        # cache's per-block write locks, holding task slots the
-        # materializing job needs — phase-profiled 44.8 s types:count
-        # in the r17 session's machine state, of which only ~6 s is
-        # the distinct itself; see OPTIMIZATION_r17.md). external_ids
-        # is independent of everything (it scans parquet, not the
-        # caches) and starts immediately alongside the counts.
-        if cfg.write_types:
-            # DISK_ONLY for the retained cleaned frames (r6 sweep,
-            # BENCH_SCALE.md): at 84M triples it matches MEMORY_AND_DISK
-            # +35% win from staggered sinks while halving memory spill
-            # (10.8 -> 4.4 GB) — the frames are each read a handful of
-            # times by sequential sinks, so page-cache-backed local disk
-            # serves them as fast as the unified-memory cache WITHOUT
-            # evicting the sinks' shuffle/sort working memory. The 100 TB
-            # translation: cache cold, sink-phase intermediates on local
-            # disk; keep executor memory for execution.
-            _lvl = getattr(
-                StorageLevel,
-                os.environ.get("SPARK_GRAFT_RETAIN_LEVEL", "DISK_ONLY"),
-            )
-            retained = {
-                name: frame.persist(_lvl) for name, frame in frames
+            stats_frames = {
+                "labels": label_triples,
+                "interlanguage_links": interlang_triples,
+                "page_links": page_links_triples,
+                "article_categories": category_triples,
+                "skos_categories": skos_triples,
+                "geo_coordinates": geo_triples,
+                "infobox_properties": all_infobox,
             }
+            if cfg.top_infobox_properties_per_lang:
+                k = cfg.top_infobox_properties_per_lang
+                stats_frames[f"top {k} infobox_properties"] = infobox_triples
+            stats_counts: dict[str, int] = {}
+            for name, frame in stats_frames.items():
+                c = dataset_counts(frame)
+                stats_counts[name] = c["triples"]
+                print(
+                    f"{name}: {c['triples']:,} triples, {c['nodes']:,} nodes, "
+                    f"{c['predicates']:,} predicates"
+                )
+            main_table, en_star_table = per_lang_stats_tables(stats_frames)
+            from dgraph_dbpedia_spark.operators.cachectl import release
+
+            try:
+                print()
+                print("Triples per languages and dataset:")
+                main_table.show(1000, truncate=False)
+                en_star_table.show(1000, truncate=False)
+            finally:
+                # the shows fully materialize both tables; release the
+                # shared fold cache even if a show raises (the curate.py
+                # must-not-outlive-the-failure rule)
+                release(main_table)
+
+        typed = typed_triples(infobox_triples)
+        # the dataset sinks in submission order: LONGEST JOB FIRST (infobox
+        # and page_links dominate real DBpedia dumps and the bench corpus),
+        # so no large job lands behind a small one in the pool's queue
+        # (profiled r14: cold 38.7 -> 32.0 s at 600k bench subjects)
+        frames = {
+            "infobox_properties": clean_infobox(
+                typed, predicate_datatypes, cfg.externalise_uris
+            ),
+            "page_links": clean_uri_pairs(page_links_triples, cfg),
+            "interlanguage_links": clean_uri_pairs(interlang_triples, cfg),
+            "labels": clean_labels(label_triples, cfg),
+            "article_categories": clean_uri_pairs(category_triples, cfg),
+            "geo_coordinates": clean_geo(geo_triples, cfg),
+            "skos_categories": clean_skos(skos_triples, cfg),
+        }
+
+        schema = full_schema(
+            spark, infobox_triples, predicate_datatypes,
+            cfg.remove_language_tags, cfg.externalise_uris,
+            derived=schema_derived,
+        ).cache()
+        caches.append(schema)
+        # materialize the cached dimensions (topk, predicate_datatypes,
+        # schema) once, before concurrent writers race to compute them.
+        # Measured-and-rejected variants (do not re-try without re-measuring):
+        #  - overlapping this materialization with the dim-independent sinks
+        #    stretched the dims critical path ~40% under contention (21.2s
+        #    vs 19.3s total at 60k bench subjects);
+        #  - persisting the typed infobox frame for its four consumers lost
+        #    to Catalyst column pruning — the cache materializes all columns
+        #    while each uncached consumer reads a 2-column pruned subset
+        #    (22.6s vs 19.3s);
+        #  - deriving types.rdf from in-memory frames instead of the gzip
+        #    read-back recomputed every cleaned frame after unpersist and
+        #    doubled total wall-clock (40.6s).
+        schema.count()
+
+        types = None
+        if cfg.write_types:
+            # the cleaned frames are retained UP FRONT (RETAIN_LEVEL) so the
+            # types derivation reads the caches the sink counts fill — not
+            # the gzip read-back (gzip text is non-splittable, so at scale
+            # the read-back caps the types stage's parallelism at file count
+            # and decompresses every output a second time)
+            caches.extend(f.persist(RETAIN_LEVEL) for f in frames.values())
             # the written files' content = invalid_predicate_filter(pre-
             # write frame), so filtering the retained frames is value-
             # identical to the reference's read-the-rdf-back derivation
@@ -725,7 +735,7 @@ def transform(
             # re-scan. article_categories SUBJECTS are articles too
             # (:419 — previously missing, ADVICE r1); its objects are
             # the Category nodes.
-            pre = {n: invalid_predicate_filter(f) for n, f in retained.items()}
+            pre = {n: invalid_predicate_filter(f) for n, f in frames.items()}
             articles = [
                 pre[n].select("s", "lang")
                 for n in ("labels", "infobox_properties", "interlanguage_links",
@@ -736,19 +746,7 @@ def transform(
                 pre["article_categories"].select(F.col("o").alias("s"), "lang"),
                 pre["skos_categories"].select("s", "lang"),
             )
-            n_sinks = len(frames)
-
-            def _types_after_counts() -> DataFrame:
-                # park until every sink's count job has materialized its
-                # retained cache (write_rdf releases the semaphore from
-                # a finally, so a failed sink still unblocks this); then
-                # the union-distinct runs over warm DISK_ONLY blocks
-                for _ in range(n_sinks):
-                    sink_counts_done.acquire()
-                return write_rdf(spark, types, f"{out}/types.rdf")
-
-            types_future = pool.submit(_types_after_counts)
-        xid_future = None
+        external_ids = None
         if cfg.externalise_uris:
             # NOTE (reference parity): infobox URI-typed OBJECTS are
             # blank-node-rewritten by clean_infobox but deliberately NOT
@@ -757,15 +755,12 @@ def transform(
             # 374-389), so those blank nodes carry no <xid> there either;
             # we mirror that exactly rather than "fix" the upstream.
             #
-            # r16 (guide §2.3 project-before-union / §6): the four
-            # datasets contributing BOTH endpoints used to appear as
-            # two single-column branches each — two scans per dataset.
-            # _both_ends emits (s, lang) and (o-as-s, lang) from ONE
-            # scan via a 2-row inline; the union multiset (and so the
-            # distinct) is identical, and the xid job reads each
-            # parquet dataset once instead of twice — at 100 TB that
-            # halves the external-id pass's input I/O.
-            xid_inputs = [
+            # r16 (guide §2.3 project-before-union / §6): _both_ends emits
+            # (s, lang) and (o-as-s, lang) from ONE scan via a 2-row
+            # inline; the union multiset (and so the distinct) is
+            # identical, and the xid job reads each parquet dataset once
+            # instead of twice.
+            external_ids = external_id_triples([
                 label_triples.select("s", "lang"),
                 infobox_triples.select("s", "lang"),
                 _both_ends(interlang_triples),
@@ -777,67 +772,27 @@ def transform(
                 ),
                 spark.createDataFrame([(SKOS_CONCEPT, "any")], ["s", "lang"]),
                 geo_triples.select("s", "lang"),
-            ]
-            xid_future = pool.submit(
-                write_rdf, spark, external_id_triples(xid_inputs),
-                f"{out}/external_ids.rdf",
+            ])
+
+        outputs = _sink_phase(spark, out, frames, types, external_ids, schema)
+
+        if cfg.print_stats:
+            # reference denominator is the top-k-FILTERED infobox count
+            # (DbpediaDgraphSparkApp.scala:449), not the raw input count.
+            # Reuse the count the stats loop above already computed for
+            # exactly this frame — re-running it here was a second full
+            # scan + semi-join over the largest dataset at the end of the
+            # pipeline.
+            k = cfg.top_infobox_properties_per_lang
+            denom_key = f"top {k} infobox_properties" if k else "infobox_properties"
+            coverage = outputs["infobox_properties"].count() * 100 // max(
+                stats_counts[denom_key], 1
             )
-        # plain sinks next, in descending expected size (infobox /
-        # page_links dominate real DBpedia dumps and the bench corpus)
-        # so no large job lands behind a small one in the queue
-        by_name = dict(frames)
-        sink_order = _ordered_sink_names(by_name)
-        futures = {
-            name: pool.submit(
-                write_rdf,
-                spark,
-                retained[name] if cfg.write_types else by_name[name],
-                f"{out}/{name}.rdf",
-                not cfg.write_types,
-                sink_counts_done.release if cfg.write_types else None,
-            )
-            for name in sink_order
-        }
-        schema_futures = [
-            pool.submit(write_schema, schema, f"{out}/schema.dgraph", False),
-            pool.submit(write_schema, schema, f"{out}/schema.indexed.dgraph", True),
-        ]
-        outputs: dict[str, DataFrame] = {n: f.result() for n, f in futures.items()}
-        for f in schema_futures:
-            f.result()
-        if xid_future is not None:
-            outputs["external_ids"] = xid_future.result()
+            print(f"cleaned-up infoboxes cover {coverage}% of original rows")
+            from dgraph_dbpedia_spark.observability import collect_spill_metrics
 
-    if types_future is not None:
-        outputs["types"] = types_future.result()
-        for p in retained.values():
-            p.unpersist()
-
-    if cfg.print_stats:
-        # reference denominator is the top-k-FILTERED infobox count
-        # (DbpediaDgraphSparkApp.scala:449), not the raw input count.
-        # Reuse the count the stats loop above already computed for
-        # exactly this frame — re-running it here was a second full
-        # scan + semi-join over the largest dataset at the end of the
-        # pipeline.
-        k = cfg.top_infobox_properties_per_lang
-        denom_key = f"top {k} infobox_properties" if k else "infobox_properties"
-        coverage = outputs["infobox_properties"].count() * 100 // max(
-            stats_counts[denom_key], 1
-        )
-        print(f"cleaned-up infoboxes cover {coverage}% of original rows")
-        from dgraph_dbpedia_spark.observability import collect_spill_metrics
-
-        print(collect_spill_metrics(spark).report())
-
-    # release the dimension caches (cube / topk / predicate_datatypes
-    # from infobox_dims, plus the schema frame): every consumer — the
-    # sinks, the schema writers, the stats — has resolved by here, and
-    # a long-lived session calling transform() repeatedly must not
-    # accumulate one cached dim set per call (the retained sink frames
-    # already get this treatment above)
-    for c in dim_caches:
-        c.unpersist()
-    schema.unpersist()
-
-    return outputs
+            print(collect_spill_metrics(spark).report())
+        return outputs
+    finally:
+        for c in caches:
+            c.unpersist()

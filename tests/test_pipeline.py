@@ -261,8 +261,10 @@ def test_transform_schedule_independent(spark, pipeline_dirs, tmp_path, monkeypa
     (fully serial) run produces the same line sets as the module
     fixture's concurrent run — guards the r6 wave-scheduling work
     against any ordering-dependent nondeterminism."""
+    from dgraph_dbpedia_spark.plans import transform as transform_mod
+
     _, parquet, out, _, _ = pipeline_dirs
-    monkeypatch.setenv("SPARK_GRAFT_SINK_WORKERS", "1")
+    monkeypatch.setattr(transform_mod, "SINK_WORKERS", 1)
     out2 = tmp_path / "rdf_serial"
     transform(
         spark,
@@ -281,6 +283,82 @@ def test_transform_schedule_independent(spark, pipeline_dirs, tmp_path, monkeypa
         b = spark.read.text(os.path.join(str(out2), ds))
         assert a.count() == b.count(), ds
         assert a.exceptAll(b).count() == 0, ds
+
+
+@pytest.mark.parametrize("where", ["before_count", "after_count"])
+def test_transform_failing_sink_raises_and_releases(
+    spark, pipeline_dirs, tmp_path, monkeypatch, where
+):
+    """A dataset sink that fails before its count job (in a wrapper
+    around write_rdf) or after it (in the gzip write) makes transform()
+    raise that error well inside the join timeout — the types job, which
+    waits for every sink's count, must not park forever — and leaves no
+    more persisted frames behind than the session held before."""
+    import threading
+
+    from dgraph_dbpedia_spark.plans import transform as transform_mod
+
+    class Injected(RuntimeError):
+        pass
+
+    if where == "before_count":
+        write_rdf = transform_mod.write_rdf
+
+        def failing(spark_, df, path, *args):
+            if path.endswith("/page_links.rdf"):
+                raise Injected(path)
+            return write_rdf(spark_, df, path, *args)
+
+        monkeypatch.setattr(transform_mod, "write_rdf", failing)
+    else:
+        write_partitioned_by = transform_mod.write_partitioned_by
+
+        def failing(df, *args, path, **kwargs):
+            if path.endswith("/page_links.rdf"):
+                raise Injected(path)
+            return write_partitioned_by(df, *args, path=path, **kwargs)
+
+        monkeypatch.setattr(transform_mod, "write_partitioned_by", failing)
+
+    _, parquet, _, _, _ = pipeline_dirs
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = len(persistent())
+    raised: list[Exception] = []
+
+    def run():
+        try:
+            transform(
+                spark, str(parquet), str(tmp_path / "rdf_failing"),
+                cfg=TransformConfig(
+                    write_types=True, externalise_uris=True,
+                    remove_language_tags=True,
+                    top_infobox_properties_per_lang=5, print_stats=False,
+                ),
+            )
+        except Exception as e:  # noqa: BLE001 - asserted below
+            raised.append(e)
+
+    worker = threading.Thread(target=run, daemon=True)
+    worker.start()
+    worker.join(timeout=180)
+    assert not worker.is_alive(), "transform did not return after a failing sink"
+    assert len(raised) == 1 and isinstance(raised[0], Injected), raised
+    assert len(persistent()) <= before
+
+
+def test_env_settings_are_deployment_only():
+    """The program reads only deployment and path settings from the
+    environment; tuning values (sink-wave width, retain level, rows per
+    file, gzip level, shuffle partitions) are constants. Pure text scan,
+    no Spark."""
+    import re
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    names: set[str] = set()
+    for f in [root / "__spark_entry__.py", *(root / "dgraph_dbpedia_spark").rglob("*.py")]:
+        names |= set(re.findall(r"SPARK_GRAFT_([A-Z_]+)", f.read_text()))
+    assert names == {"CPUS", "DRIVER_MEM", "DRIVER_JAVA_OPTS", "ORACLE_SF_DIR"}
 
 
 def test_curate_corpus_every_stage_fires(spark):
